@@ -13,9 +13,15 @@ feed LIMIT are made deterministic with explicit tie-breaks.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
 from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+_T = TypeVar("_T")
 
 TABLES = [
     "region",
@@ -48,8 +54,6 @@ def prepare_session(spark: SparkSession) -> None:
         except Exception:
             pass  # non-runtime-settable in this deployment; best effort
     try:
-        import os
-        import shutil
         import tempfile
 
         pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -88,8 +92,6 @@ def scratch_dir(prefix: str, name: str | None = None) -> str:
     actually CREATED here, so callers can write into it directly. The
     cleanup handler registers once per path."""
     import atexit
-    import os
-    import shutil
     import tempfile
 
     if name is None:
@@ -105,6 +107,90 @@ def scratch_dir(prefix: str, name: str | None = None) -> str:
         _SCRATCH_REGISTERED.add(d)
         atexit.register(shutil.rmtree, d, True)
     return d
+
+
+def gate_dir(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """The gate's named scratch dir for this Spark application and
+    ``sf_dir`` — the one place that knows the path format, so probes
+    that force a cold rebuild clear the same dir `gate_asset` fills."""
+    return scratch_dir(
+        prefix,
+        "{}-{}".format(
+            spark.sparkContext.applicationId,
+            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
+        ),
+    )
+
+
+def gate_asset(
+    spark: SparkSession, sf_dir: str, prefix: str, build: Callable[[str], None]
+) -> str:
+    """Build a gate's on-disk state once per (application, sf_dir).
+
+    Returns the `gate_dir`; ``build(base)`` runs only while its
+    ``_gate_done`` sentinel is missing, always into an emptied dir, and
+    the sentinel is written atomically after it returns — a build that
+    raises leaves no sentinel, so the next call rebuilds from scratch."""
+    base = gate_dir(spark, sf_dir, prefix)
+    done = os.path.join(base, "_gate_done")
+    if not os.path.exists(done):
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base)
+        build(base)
+        tmp = done + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write("ok")
+        os.replace(tmp, done)
+    return base
+
+
+# name -> ((applicationId, sf_dir), value): one live generation per name
+_SESSION_MEMOS: dict[str, tuple[tuple[str, str], object]] = {}
+
+
+def session_memo(
+    spark: SparkSession, name: str, sf_dir: str, build: Callable[[], _T]
+) -> _T:
+    """Return ``build()``'s value, built once per (name, application,
+    sf_dir) and reused on repeat invocation — for deterministic fits and
+    cached frames that several gates or sweeps share.
+
+    Keyed on ``sparkContext.applicationId``, never on ``id(spark)``
+    (CPython reuses ids after a session stops, which would hand back
+    frames bound to a dead session). A different key evicts the name's
+    old generation and unpersists the DataFrames it held (the value
+    itself, or the DataFrames in a list/tuple value)."""
+    key = (spark.sparkContext.applicationId, sf_dir)
+    held = _SESSION_MEMOS.get(name)
+    if held is not None and held[0] == key:
+        return held[1]
+    if held is not None:
+        del _SESSION_MEMOS[name]
+        old = held[1]
+        for df in old if isinstance(old, (list, tuple)) else [old]:
+            if isinstance(df, DataFrame):
+                try:
+                    df.unpersist()
+                except Exception:
+                    # frames of a stopped session: nothing left to free
+                    pass
+    value = build()
+    _SESSION_MEMOS[name] = (key, value)
+    return value
+
+
+#: streaming gates feed their sources as this many micro-batch drops
+DROP_SHARDS = 4
+
+
+def write_drops(df: DataFrame, key: Column, raw: str) -> None:
+    """Append ``df`` to ``raw`` as DROP_SHARDS single-file parquet drops,
+    split on ``key % DROP_SHARDS`` — with maxFilesPerTrigger=1 each drop
+    is one micro-batch of a streaming gate."""
+    for i in range(DROP_SHARDS):
+        df.filter(key % DROP_SHARDS == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(raw)
 
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from jobinsight_data_pipeline_spark.catalog import load
+from jobinsight_data_pipeline_spark.catalog import gate_asset, load, write_drops
 
 def REVENUE():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -1140,10 +1140,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition with UNION ALL + DISTINCT: any duplicate that survives
     cross-batch state, or any row the sink loses, shifts the per-type
     counts and fails the hash."""
-    import hashlib
-    import os
-    import shutil
-
     from jobinsight_data_pipeline_spark.streaming.incremental import stream_dedup
 
     t = load(spark, sf_dir, "events")
@@ -1152,25 +1148,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream only; the gate output carries no timestamps, so the
     # session-TZ-dependent instant never reaches the hash.
     ev = t["events"].withColumn("ts", F.col("ts").cast("timestamp"))
+
     # deterministic per-(session, sf_dir) scratch dir (exit-cleaned) —
     # a fresh mkdtemp per call leaked two event copies + sink + ckpt on
     # every sweep and driver round; the done-sentinel also lets repeat
     # invocations skip re-running the stream
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
-
-    base = scratch_dir(
-        "streamdedup-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        # rebuild from scratch; leave a completed sink alone (its content
-        # is deterministic, and a frame returned by an earlier invocation
-        # may still lazily read those files)
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
         for mods in ((0, 1), (1, 2)):
             ev.filter((F.col("event_id") % 3).isin(*mods)).coalesce(1).write.mode(
@@ -1181,8 +1164,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, raw, ev.schema, f"{base}/sink", f"{base}/ckpt", ["event_id"]
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamdedup-gate-", build)
 
     return (
         spark.read.parquet(f"{base}/sink")
@@ -1830,11 +1813,6 @@ def q_stream_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     by per-user min — min commutes, so streaming ≡ batch exactly and
     this gate shares O_COHORT_RETENTION verbatim (the stream_cms
     mergeability discipline)."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.behavior import (
         cohort_retention,
     )
@@ -1845,28 +1823,16 @@ def q_stream_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir, "events")
     ev = t["events"].select("user_id", "ts", "event_id")
-    base = scratch_dir(
-        "streamcohort-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(ev, F.col("event_id"), raw)
         query = stream_first_seen(
             spark, raw, ev.schema, f"{base}/state", f"{base}/ckpt"
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamcohort-gate-", build)
     first = read_first_seen(spark, f"{base}/state")
     return cohort_retention(t["events"], first_seen=first)
 
@@ -1944,11 +1910,6 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     commute, so streaming ≡ batch exactly and this gate shares
     O_OHLC_BARS verbatim (the stream_cms / stream_cohort mergeable-
     state discipline)."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.timeseries import (
         merge_ohlc_partials,
     )
@@ -1958,22 +1919,10 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir, "events")
     ev = t["events"].select("event_type", "ts", "event_id", "value")
-    base = scratch_dir(
-        "streamohlc-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(ev, F.col("event_id"), raw)
         query = stream_ohlc(
             spark,
             raw,
@@ -1990,8 +1939,8 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             width_micros=3_600_000_000,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamohlc-gate-", build)
     partials = spark.read.parquet(f"{base}/state")
     return merge_ohlc_partials(partials, ["event_type"])
 

@@ -20,7 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jobinsight_data_pipeline_spark.catalog import load
+from jobinsight_data_pipeline_spark.catalog import (
+    gate_asset,
+    load,
+    session_memo,
+    write_drops,
+)
 from jobinsight_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     md5_token_hash60,
@@ -2803,11 +2808,8 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cross-batch match counts as history in the loop but as the
     within-batch rule in one-shot mode, so the COUNT (unlike the
     status) is not representation-invariant."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_semantic_state,
         unit_centroids,
@@ -2825,16 +2827,7 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
 
-    base = scratch_dir(
-        "streamsem-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
         now = 1_700_000_000
         stamped: set[str] = set()
@@ -2857,8 +2850,8 @@ def q_stream_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             record="all",
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamsem-gate-", build)
     return spark.read.parquet(f"{base}/sink").select(
         "vec_id", "cell", "status"
     )
@@ -3159,11 +3152,8 @@ def q_forget_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     FRESH tombstone-filtered corpus: the erased-index serve must be
     bit-identical to a from-scratch rebuild on the surviving documents.
     Eager per (session, sf_dir) behind a done-sentinel."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.ranking import (
         bm25_topk_indexed,
         build_inverted_index,
@@ -3175,17 +3165,9 @@ def q_forget_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir, "documents")
     docs = t["documents"]
-    base = scratch_dir(
-        "forgetbm25-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    lake = ParquetLake(os.path.join(base, "lake"))
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(os.path.join(base, "lake"), ignore_errors=True)
+
+    def build(base: str) -> None:
+        lake = ParquetLake(os.path.join(base, "lake"))
         postings, lens = build_inverted_index(docs)
         lake.write(postings, "postings")
         lake.write(lens, "lens")
@@ -3195,8 +3177,9 @@ def q_forget_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         forget_keys(
             spark, lake, {"postings": "doc", "lens": "doc"}, keys
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "forgetbm25-gate-", build)
+    lake = ParquetLake(os.path.join(base, "lake"))
     top = bm25_topk_indexed(
         lake.read(spark, "postings"),
         lake.read(spark, "lens"),
@@ -3470,28 +3453,20 @@ QUALIFY rank <= 25
 """
 
 
-_WORDPIECE_VOCAB_CACHE: dict[tuple[int, str], dict] = {}
-# streamed-state twin: (merged word table localCheckpoint, vocab) per
-# (session, stream scratch dir) — see q_stream_wordpiece
-_STREAM_WP_CACHE: dict[tuple[int, str], tuple] = {}
-
-
 def _wordpiece_vocab(spark: SparkSession, sf_dir: str) -> dict:
     """Memoized per (session, sf_dir): the vocab derivation runs five
     model-sized collects — once per session, not once per gate call
-    (the _KMEANS_FIT_CACHE discipline)."""
+    (`session_memo`)."""
     from jobinsight_data_pipeline_spark.operators.wordpiece import (
         build_wordpiece_vocab,
         corpus_words,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _WORDPIECE_VOCAB_CACHE:
+    def build() -> dict:
         t = load(spark, sf_dir, "documents")
-        _WORDPIECE_VOCAB_CACHE[key] = build_wordpiece_vocab(
-            corpus_words(t["documents"])
-        )
-    return _WORDPIECE_VOCAB_CACHE[key]
+        return build_wordpiece_vocab(corpus_words(t["documents"]))
+
+    return session_memo(spark, "wordpiece_vocab", sf_dir, build)
 
 
 def _wordpiece_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3526,13 +3501,8 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream_cms/stream_pca shared-oracle discipline). Only the final
     scoring pass re-reads documents; the estimator state never
     rescans history."""
-    import hashlib
-    import os
-    import shutil
-
     from pyspark.sql import Window
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.sampling import (
         dsir_features,
         dsir_score_against_counts,
@@ -3545,21 +3515,9 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"].select("doc_id", "text", "source")
 
-    base = scratch_dir(
-        "streamdsir-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_dsir_build(
             spark,
             raw,
@@ -3570,8 +3528,8 @@ def q_stream_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt="dsir:",
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamdsir-gate-", build)
 
     counts = read_dsir_state(spark, f"{base}/state").localCheckpoint(
         eager=True
@@ -3613,11 +3571,6 @@ def q_stream_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
     O_WORDPIECE_ENCODE verbatim (the stream_cms/stream_pca/stream_dsir
     shared-oracle discipline). Streaming vocabulary maintenance: the
     tokenizer inventory stays current without rescanning history."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.wordpiece import (
         UNK,
         build_wordpiece_vocab,
@@ -3631,39 +3584,29 @@ def q_stream_wordpiece(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"].select("doc_id", "text")
 
-    base = scratch_dir(
-        "streamwp-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_word_counts(
             spark, raw, docs.schema, f"{base}/state", f"{base}/ckpt"
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
 
-    # memoize the merged-state word table + derived vocab per
-    # (session, stream scratch dir) — the five model-sized vocab
-    # collects otherwise re-run on every gate invocation, unlike the
-    # batch twin's _WORDPIECE_VOCAB_CACHE (r9 ADVICE; suite cost only)
-    key = (id(spark), base)
-    if key not in _STREAM_WP_CACHE:
+    base = gate_asset(spark, sf_dir, "streamwp-gate-", build)
+
+    # memoize the merged-state word table (localCheckpoint) + derived
+    # vocab per (session, sf_dir) — the five model-sized vocab collects
+    # otherwise re-run on every gate invocation, unlike the batch twin's
+    # _wordpiece_vocab (r9 ADVICE; suite cost only)
+    def vocab_of_state() -> tuple:
         words = read_word_count_state(
             spark, f"{base}/state"
         ).localCheckpoint(eager=True)
-        _STREAM_WP_CACHE[key] = (words, build_wordpiece_vocab(words))
-    words, vocab = _STREAM_WP_CACHE[key]
+        return words, build_wordpiece_vocab(words)
+
+    words, vocab = session_memo(
+        spark, "stream_wordpiece_vocab", sf_dir, vocab_of_state
+    )
     enc = encode_distinct_words(words, vocab)
     return enc.select(
         "w",
@@ -3887,7 +3830,6 @@ _PCA_ROUNDS = 4
 _PCA_SCALE = 10**6
 _PCA_DIM = 64
 _PCA_TOPN = 20
-_PCA_EIG_CACHE: dict[tuple[int, str], list[int]] = {}
 
 
 def _pca_eigvec(spark: SparkSession, sf_dir: str) -> list[int]:
@@ -3899,16 +3841,14 @@ def _pca_eigvec(spark: SparkSession, sf_dir: str) -> list[int]:
         power_iteration_int,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PCA_EIG_CACHE:
+    def build() -> list[int]:
         t = load(spark, sf_dir, "embeddings")
         g = gram_matrix(
             t["embeddings"], "embedding", dim=_PCA_DIM, scale=_PCA_SCALE
         )
-        _PCA_EIG_CACHE[key] = power_iteration_int(
-            g, rounds=_PCA_ROUNDS, scale=_PCA_SCALE
-        )
-    return _PCA_EIG_CACHE[key]
+        return power_iteration_int(g, rounds=_PCA_ROUNDS, scale=_PCA_SCALE)
+
+    return session_memo(spark, "pca_eigvec", sf_dir, build)
 
 
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4012,7 +3952,6 @@ _PQT_K = 4
 _PQT_ITERS = 2
 _PQT_DIM = 64
 _PQT_SCALE = 10**6
-_PQT_CACHE: dict[tuple[int, str], list] = {}
 
 
 def _pq_books(spark: SparkSession, sf_dir: str) -> list:
@@ -4021,15 +3960,15 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list:
         train_pq_codebooks_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PQT_CACHE:
+    def build() -> list:
         t = load(spark, sf_dir, "embeddings")
-        _PQT_CACHE[key] = train_pq_codebooks_quantized(
+        return train_pq_codebooks_quantized(
             t["embeddings"], "embedding", "vec_id",
             m=_PQT_M, k=_PQT_K, iterations=_PQT_ITERS,
             dim=_PQT_DIM, scale=_PQT_SCALE,
         )
-    return _PQT_CACHE[key]
+
+    return session_memo(spark, "pq_books", sf_dir, build)
 
 
 def q_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4287,7 +4226,6 @@ O_PQ_TRAINED_TOPK = _PQT_CTE_PREFIX + _pq_topk_select()
 
 
 _PCA_DOWN = 10**13
-_PCA_EIG2_CACHE: dict[tuple[int, str], list[int]] = {}
 
 
 def _pca_eigvec2(spark: SparkSession, sf_dir: str) -> list[int]:
@@ -4299,17 +4237,15 @@ def _pca_eigvec2(spark: SparkSession, sf_dir: str) -> list[int]:
         power_iteration_int,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PCA_EIG2_CACHE:
+    def build() -> list[int]:
         t = load(spark, sf_dir, "embeddings")
         g = gram_matrix(
             t["embeddings"], "embedding", dim=_PCA_DIM, scale=_PCA_SCALE
         )
         g2 = deflate_gram_int(g, _pca_eigvec(spark, sf_dir), down=_PCA_DOWN)
-        _PCA_EIG2_CACHE[key] = power_iteration_int(
-            g2, rounds=_PCA_ROUNDS, scale=_PCA_SCALE
-        )
-    return _PCA_EIG2_CACHE[key]
+        return power_iteration_int(g2, rounds=_PCA_ROUNDS, scale=_PCA_SCALE)
+
+    return session_memo(spark, "pca_eigvec2", sf_dir, build)
 
 
 def q_pca_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4414,11 +4350,6 @@ def q_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch EXACTLY and this gate shares O_PCA_POWER verbatim (the
     stream_cms shared-oracle discipline). The covariance state a
     continuously-ingested corpus keeps without rescanning history."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.clustering import (
         power_iteration_int,
     )
@@ -4430,21 +4361,9 @@ def q_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"].select("vec_id", "embedding")
 
-    base = scratch_dir(
-        "streampca-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            emb.filter(F.col("vec_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(emb, F.col("vec_id"), raw)
         query = stream_gram_build(
             spark,
             raw,
@@ -4456,8 +4375,8 @@ def q_stream_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
             scale=_PCA_SCALE,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streampca-gate-", build)
 
     gram = read_gram_state(spark, f"{base}/state", dim=_PCA_DIM)
     eig = power_iteration_int(gram, rounds=_PCA_ROUNDS, scale=_PCA_SCALE)
@@ -4538,29 +4457,18 @@ def _sq8_index(spark: SparkSession, sf_dir: str):
     """The persisted SQ8 index for (session, sf_dir) — (codes, stats)
     built ONCE behind a done-sentinel; every SQ8 serving gate reads the
     same asset (the _ivfpq_index discipline)."""
-    import hashlib
-    import os
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_sq8_index,
     )
 
     t = load(spark, sf_dir, "embeddings")
-    base = scratch_dir(
-        "sq8idx-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
+
+    def build(base: str) -> None:
         codes, stats = build_sq8_index(t["embeddings"])
         codes.write.mode("overwrite").parquet(f"{base}/codes")
         stats.write.mode("overwrite").parquet(f"{base}/stats")
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "sq8idx-gate-", build)
     return spark.read.parquet(f"{base}/codes"), spark.read.parquet(
         f"{base}/stats"
     )
@@ -5233,11 +5141,8 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_ivf_pq_index and written through the ParquetLake PARTITIONED
     BY cell behind a done-sentinel; every serving gate reads the same
     asset (the build-once / serve-many lifecycle made literal)."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         unit_centroids,
@@ -5245,17 +5150,9 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
     t = load(spark, sf_dir, "embeddings")
-    base = scratch_dir(
-        "ivfpq-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    lake = ParquetLake(os.path.join(base, "lake"))
-    if not os.path.exists(done):
-        shutil.rmtree(os.path.join(base, "lake"), ignore_errors=True)
+
+    def build(base: str) -> None:
+        lake = ParquetLake(os.path.join(base, "lake"))
         cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
         # cell repartition before the partitioned write (r12 compaction
         # lesson): the operator widens its encode internally as of r13
@@ -5263,8 +5160,9 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             t["embeddings"], cents, _pq_cb()
         ).repartition("cell")
         lake.write(index, "ivfpq", partition_by=["cell"])
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "ivfpq-gate-", build)
+    lake = ParquetLake(os.path.join(base, "lake"))
     return lake.read(spark, "ivfpq")
 
 
@@ -5506,10 +5404,6 @@ def _cemb_res_train_cte() -> str:
     )
 
 
-_CEVB_CACHE: dict[tuple[int, str], list] = {}
-_CEVRB_CACHE: dict[tuple[int, str], list] = {}
-
-
 def _cemb_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Memoized eval-shape PQ books trained on the clustered corpus
     (floats, int/10⁶) per (session, sf_dir)."""
@@ -5517,17 +5411,15 @@ def _cemb_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
         train_pq_codebooks_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEVB_CACHE:
+    def build() -> list[list[list[float]]]:
         ints = train_pq_codebooks_quantized(
             _clustered_emb(spark, sf_dir), "embedding", "vec_id",
             m=_CEV_M, k=_CEV_KC, iterations=_CEV_ITERS,
             dim=64, scale=_CEV_SCALE,
         )
-        _CEVB_CACHE[key] = [
-            [[x / _CEV_SCALE for x in c] for c in b] for b in ints
-        ]
-    return _CEVB_CACHE[key]
+        return [[[x / _CEV_SCALE for x in c] for c in b] for b in ints]
+
+    return session_memo(spark, "cemb_books", sf_dir, build)
 
 
 def _cemb_res_books(
@@ -5542,18 +5434,16 @@ def _cemb_res_books(
         unit_centroids,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEVRB_CACHE:
+    def build() -> list[list[list[float]]]:
         ints = train_pq_codebooks_residual(
             _clustered_emb(spark, sf_dir),
             unit_centroids(64, IVFPQ_LISTS, seed=11),
             m=_CEV_M, k=_CEV_KC, iterations=_CEV_ITERS,
             dim=64, scale=_CEV_SCALE,
         )
-        _CEVRB_CACHE[key] = [
-            [[x / _CEV_SCALE for x in c] for c in b] for b in ints
-        ]
-    return _CEVRB_CACHE[key]
+        return [[[x / _CEV_SCALE for x in c] for c in b] for b in ints]
+
+    return session_memo(spark, "cemb_res_books", sf_dir, build)
 
 
 def _cluster_centers() -> list[list[float]]:
@@ -5564,16 +5454,13 @@ def _cluster_centers() -> list[list[float]]:
     return unit_centroids(64, _CLUSTER_N, seed=_CLUSTER_SEED)
 
 
-_CEMB_FRAME_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def _clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clustered eval corpus, materialized ONCE per (session,
     sf_dir): eight call sites (both book trainers, the index build, and
     the four eval gates' query/qrel sides) consume this frame, and each
     of their jobs re-ran the three interpreted-HOF projections of
     `clustered_embeddings` before this was pinned (r12 optimization —
-    the `_KMEANS_FIT_CACHE` discipline applied to a DataFrame: widened
+    `session_memo` applied to a DataFrame: widened
     for the HOF folds, eager localCheckpoint, never freed — the
     vectors are corpus-sized blocks every later gate reuses)."""
     from jobinsight_data_pipeline_spark.operators.parallelism import (
@@ -5583,15 +5470,15 @@ def _clustered_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         clustered_embeddings,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _CEMB_FRAME_CACHE:
+    def build() -> DataFrame:
         t = load(spark, sf_dir, "embeddings")
-        _CEMB_FRAME_CACHE[key] = widen_for_cpu(
+        return widen_for_cpu(
             clustered_embeddings(
                 t["embeddings"], _cluster_centers(), lam=_CLUSTER_LAM
             )
         ).localCheckpoint(eager=True)
-    return _CEMB_FRAME_CACHE[key]
+
+    return session_memo(spark, "clustered_emb", sf_dir, build)
 
 
 def _cemb_cte() -> str:
@@ -5622,28 +5509,16 @@ def _ivfpq_index_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_ivfpq_index` done-sentinel pattern on `_clustered_emb` with the
     seed-11 coarse quantizer and the corpus-TRAINED eval-shape books
     (`_cemb_books`)."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         unit_centroids,
     )
     from jobinsight_data_pipeline_spark.sources.lake import ParquetLake
 
-    base = scratch_dir(
-        "ivfpq-cgate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    lake = ParquetLake(os.path.join(base, "lake"))
-    if not os.path.exists(done):
-        shutil.rmtree(os.path.join(base, "lake"), ignore_errors=True)
+    def build(base: str) -> None:
+        lake = ParquetLake(os.path.join(base, "lake"))
         cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
         index = build_ivf_pq_index(
             _clustered_emb(spark, sf_dir), cents,
@@ -5654,8 +5529,9 @@ def _ivfpq_index_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
         # file per cell it touches (bench A/B: 494 files -> 16, and the
         # compacted layout serves ~1.7x faster). Guide §6.
         lake.write(index.repartition("cell"), "ivfpq", partition_by=["cell"])
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "ivfpq-cgate-", build)
+    lake = ParquetLake(os.path.join(base, "lake"))
     return lake.read(spark, "ivfpq")
 
 
@@ -5715,11 +5591,8 @@ def q_ivf_pq_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
     so serving the merged index shares `O_IVF_PQ_SERVE_MANY` VERBATIM
     — a lost day-2 row, a double-applied append (files are new per
     append), or a drifted encode fails the hash."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.similarity import (
         build_ivf_pq_index,
         ivf_pq_topk_many,
@@ -5729,17 +5602,9 @@ def q_ivf_pq_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
-    base = scratch_dir(
-        "ivfpqday2-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    idx_dir = os.path.join(base, "index")
-    if not os.path.exists(done):
-        shutil.rmtree(idx_dir, ignore_errors=True)
+
+    def build(base: str) -> None:
+        idx_dir = os.path.join(base, "index")
         day1 = emb.filter(F.col("vec_id") % 3 != 0)
         day2 = emb.filter(F.col("vec_id") % 3 == 0)
         # repartition("cell") before the partitioned write: the operator
@@ -5753,8 +5618,9 @@ def q_ivf_pq_day2(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_ivf_pq_index(day2, cents, _pq_cb()).repartition(
             "cell"
         ).write.partitionBy("cell").mode("append").parquet(idx_dir)
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "ivfpqday2-gate-", build)
+    idx_dir = os.path.join(base, "index")
     index = spark.read.parquet(idx_dir)
     queries = (
         emb.filter(F.col("vec_id").isin(*IVFPQ_MANY_QIDS))
@@ -7070,24 +6936,17 @@ def q_bpe_memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: BPE trainer gate: merges learned on the real corpus per round
 BPE_LEARN_ROUNDS = 8
 
-#: per-(session, sf_dir) memo for the eager trainer gate — deterministic
-#: output, so sweeps pay the 8-round driver loop once
-_BPE_LEARN_CACHE: dict = {}
-
-
 def _learned_merges(spark: SparkSession, sf_dir: str) -> list:
     """Train (or reuse) the 8-round learned merges table for this
     (session, sf_dir) — deterministic, so sweeps pay the driver loop
     once (the done-sentinel discipline, in-memory form)."""
     from jobinsight_data_pipeline_spark.operators.bpe import learn_bpe_merges
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    learned = _BPE_LEARN_CACHE.get(key)
-    if learned is None:
+    def build() -> list:
         t = load(spark, sf_dir, "documents")
-        learned = learn_bpe_merges(t["documents"], n_merges=BPE_LEARN_ROUNDS)
-        _BPE_LEARN_CACHE[key] = learned
-    return learned
+        return learn_bpe_merges(t["documents"], n_merges=BPE_LEARN_ROUNDS)
+
+    return session_memo(spark, "learned_merges", sf_dir, build)
 
 
 def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7175,24 +7034,18 @@ UNIGRAM_SEED_K = 80
 UNIGRAM_VOCAB_K = 40
 UNIGRAM_PMAX = 4
 
-#: per-(session, sf_dir) memo for the eager trainer — deterministic
-#: output, so sweeps pay the EM loop once (the _learned_merges pattern)
-_UNIGRAM_CACHE: dict = {}
-
-
 def _unigram_model(spark: SparkSession, sf_dir: str) -> list:
     """Train (or reuse) the unigram-LM piece model for this
-    (session, sf_dir): ``[(piece, cnt, piece_id), …]`` in id order."""
+    (session, sf_dir): ``[(piece, cnt, piece_id), …]`` in id order —
+    deterministic, so sweeps pay the EM loop once."""
     from jobinsight_data_pipeline_spark.operators.unigram import (
         unigram_train,
         words_with_freq,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _UNIGRAM_CACHE.get(key)
-    if model is None:
+    def build() -> list:
         t = load(spark, sf_dir, "documents")
-        model = unigram_train(
+        return unigram_train(
             spark,
             words_with_freq(t["documents"]),
             rounds=UNIGRAM_ROUNDS,
@@ -7200,8 +7053,8 @@ def _unigram_model(spark: SparkSession, sf_dir: str) -> list:
             vocab_k=UNIGRAM_VOCAB_K,
             pmax=UNIGRAM_PMAX,
         )
-        _UNIGRAM_CACHE[key] = model
-    return model
+
+    return session_memo(spark, "unigram_model", sf_dir, build)
 
 
 def q_unigram_tok_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7455,23 +7308,18 @@ FROM documents d LEFT JOIN agg a USING (doc_id)"""
     )
 
 
-#: per-(session, sf_dir) memo for the day-1-trained unigram model (the
-#: streaming-encode gate's frozen artifact)
-_UNIGRAM_D1_CACHE: dict = {}
-
-
 def _unigram_d1_model(spark: SparkSession, sf_dir: str) -> list:
+    """The day-1-trained unigram model (the streaming-encode gate's
+    frozen artifact), memoized per (session, sf_dir)."""
     from jobinsight_data_pipeline_spark.operators.unigram import (
         unigram_train,
         words_with_freq,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    model = _UNIGRAM_D1_CACHE.get(key)
-    if model is None:
+    def build() -> list:
         t = load(spark, sf_dir, "documents")
         day1 = t["documents"].filter(F.col("doc_id") < INCR_SPLIT)
-        model = unigram_train(
+        return unigram_train(
             spark,
             words_with_freq(day1),
             rounds=UNIGRAM_ROUNDS,
@@ -7479,8 +7327,8 @@ def _unigram_d1_model(spark: SparkSession, sf_dir: str) -> list:
             vocab_k=UNIGRAM_VOCAB_K,
             pmax=UNIGRAM_PMAX,
         )
-        _UNIGRAM_D1_CACHE[key] = model
-    return model
+
+    return session_memo(spark, "unigram_d1_model", sf_dir, build)
 
 
 def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7494,11 +7342,8 @@ def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final model in one batch query: streaming ≡ batch for a
     stateless per-document encode, and day-2 words the day-1 model
     never saw exercise the single-char/unk fallback path."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.unigram import (
         load_model,
         save_model,
@@ -7515,19 +7360,9 @@ def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
 
-    base = scratch_dir(
-        "streamunigram-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    raw = os.path.join(base, "drops")
-    sink = os.path.join(base, "sink")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
+        raw = os.path.join(base, "drops")
+        sink = os.path.join(base, "sink")
         model_path = os.path.join(base, "model")
         save_model(spark, _unigram_d1_model(spark, sf_dir), model_path)
         model = load_model(spark, model_path)
@@ -7548,9 +7383,11 @@ def q_stream_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, raw, day2.schema, sink, os.path.join(base, "ckpt"),
             model, pmax=UNIGRAM_PMAX,
         ).awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return spark.read.parquet(sink).select("doc_id", "n_pieces", "ids_str")
+
+    base = gate_asset(spark, sf_dir, "streamunigram-gate-", build)
+    return spark.read.parquet(os.path.join(base, "sink")).select(
+        "doc_id", "n_pieces", "ids_str"
+    )
 
 
 def _stream_unigram_oracle() -> str:
@@ -7908,11 +7745,9 @@ def q_stream_forget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day1 ∪ day2a) minus tombstones: a copy of a remembered doc must
     come back exact_dup, a copy of a FORGOTTEN doc must be judged as if
     the original never existed."""
-    import hashlib
     import os
     import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
     )
@@ -7955,21 +7790,11 @@ def q_stream_forget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(cp_file_a)
     )
 
-    base = scratch_dir(
-        "streamforget-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    raw = os.path.join(base, "drops")
-    state_dir = os.path.join(base, "state")
-    sink = os.path.join(base, "sink")
-    ckpt = os.path.join(base, "ckpt")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    def build(base: str) -> None:
+        raw = os.path.join(base, "drops")
+        state_dir = os.path.join(base, "state")
+        sink = os.path.join(base, "sink")
+        ckpt = os.path.join(base, "ckpt")
         now = 1_700_000_000
         stamped: set[str] = set()
 
@@ -8005,9 +7830,11 @@ def q_stream_forget_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_hashes=INCR_NH, bands=INCR_BANDS, hash_mode="md5",
             record="all",
         ).awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return spark.read.parquet(sink).select("doc_id", "status")
+
+    base = gate_asset(spark, sf_dir, "streamforget-gate-", build)
+    return spark.read.parquet(os.path.join(base, "sink")).select(
+        "doc_id", "status"
+    )
 
 
 def _stream_forget_oracle() -> str:
@@ -8162,11 +7989,8 @@ def q_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — erasure removes the forgotten rows' codes/cells, not
     the aggregates' historical influence (re-fit on a schedule if that
     matters for your compliance posture)."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
         incremental_dedup,
@@ -8187,19 +8011,9 @@ def q_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t["embeddings"]
     cents = unit_centroids(64, IVFPQ_LISTS, seed=11)
 
-    base = scratch_dir(
-        "forgetprop-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    lake = ParquetLake(os.path.join(base, "lake"))
-    metrics_path = os.path.join(base, "metrics")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(os.path.join(base, "lake"), ignore_errors=True)
-        shutil.rmtree(metrics_path, ignore_errors=True)
+    def build(base: str) -> None:
+        lake = ParquetLake(os.path.join(base, "lake"))
+        metrics_path = os.path.join(base, "metrics")
         lake.write(docs, "documents")
         lake.write(
             build_dedup_state(
@@ -8277,8 +8091,10 @@ def q_forget_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "metric string, value long",
         )
         counts.unionByName(serve).write.parquet(metrics_path)
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "forgetprop-gate-", build)
+    lake = ParquetLake(os.path.join(base, "lake"))
+    metrics_path = os.path.join(base, "metrics")
 
     planted = docs.filter(
         F.col("doc_id").isin(*FORGET_SRC_FORGOTTEN, *FORGET_SRC_REMEMBERED)
@@ -8444,11 +8260,8 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. Candidates are materialized once behind a done-sentinel
     (the multi-pass offset machinery would otherwise recompute the
     dedup+classify+encode chain ~5×)."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
     from jobinsight_data_pipeline_spark.operators.classifier import (
         with_quality_classification,
@@ -8500,17 +8313,8 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(twins)
     )
 
-    base = scratch_dir(
-        "day2-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    cand_path = os.path.join(base, "cand")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(cand_path, ignore_errors=True)
+    def build(base: str) -> None:
+        cand_path = os.path.join(base, "cand")
         state = build_dedup_state(
             day1, n_hashes=INCR_NH, bands=INCR_BANDS, hash_mode="md5"
         )
@@ -8534,8 +8338,9 @@ def q_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("score_micro") >= 0)
             .write.parquet(cand_path)
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "day2-gate-", build)
+    cand_path = os.path.join(base, "cand")
     cand = spark.read.parquet(cand_path)
     selected = select_until_budget(
         cand, "score_micro", "n_ids", DAY2_BUDGET, ["doc_id"]
@@ -8634,9 +8439,7 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERBATIM: one exact hash over the whole streamed composition —
     ingest parse, quarantine, every cross-batch dedup decision, scoring,
     encode, budget, manifest."""
-    import hashlib
     import os
-    import shutil
 
     from pyspark.sql.types import (
         LongType,
@@ -8645,7 +8448,6 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.bpe import bpe_encode
     from jobinsight_data_pipeline_spark.operators.classifier import (
         with_quality_classification,
@@ -8702,17 +8504,9 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("source", StringType()),
         ]
     )
-    base = scratch_dir(
-        "streamday2-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    cand_path = os.path.join(base, "cand")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
+        cand_path = os.path.join(base, "cand")
         now = 1_700_000_000
 
         def _stamp_new(d: str, i: int, seen: set) -> None:
@@ -8796,8 +8590,9 @@ def q_stream_day2_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("score_micro") >= 0)
             .write.parquet(cand_path)
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamday2-gate-", build)
+    cand_path = os.path.join(base, "cand")
     cand = spark.read.parquet(cand_path)
     selected = select_until_budget(
         cand, "score_micro", "n_ids", DAY2_BUDGET, ["doc_id"]
@@ -8826,11 +8621,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     O_INCREMENTAL_DEDUP verbatim: the batch ≡ streaming pin (the
     stream_jsonl_ingest discipline). State starts from the day-1
     snapshot and grows append-only per micro-batch."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.dedup import (
         build_dedup_state,
     )
@@ -8865,16 +8657,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         twin_src.select((F.col("doc_id") + 3_100_000).alias("doc_id"), "text")
     )
 
-    base = scratch_dir(
-        "streamincr-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
         # one file per micro-batch, mtimes strictly increasing so the
         # file source processes them in id order (the equivalence
@@ -8905,8 +8688,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             record="all",
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamincr-gate-", build)
     return spark.read.parquet(f"{base}/sink").select("doc_id", "status")
 
 
@@ -8936,35 +8719,23 @@ def q_bpe_budget_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
         select_until_budget,
     )
 
-    import hashlib
     import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
 
     t = load(spark, sf_dir, "documents")
     docs = t["documents"]
+
     # materialize the encoded+scored candidates ONCE (done-sentinel
     # scratch, the ivfpq-gate pattern): the offset machinery downstream
     # (sizing job, per-bucket window, bucket totals, posexplode) walks
     # its input several times — recomputing the BPE chain per pass
     # multiplied the gate's cost ~5× at sf0.1. At 100 TB this step IS a
     # lake write of the encoded corpus.
-    base = scratch_dir(
-        "bpepacks-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    cand_path = os.path.join(base, "cand")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
+    def build(base: str) -> None:
         from jobinsight_data_pipeline_spark.operators.parallelism import (
             widen_for_cpu,
         )
 
-        shutil.rmtree(cand_path, ignore_errors=True)
+        cand_path = os.path.join(base, "cand")
         # widen before the heavy projection: the sf0.1 corpus is a
         # single parquet file, and per-token md5 hashing + the BPE
         # replace chain on one task serializes the whole build.
@@ -8990,8 +8761,9 @@ def q_bpe_budget_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "score_micro"
             ),
         ).write.parquet(cand_path)
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "bpepacks-gate-", build)
+    cand_path = os.path.join(base, "cand")
     cand = spark.read.parquet(cand_path)
     kept = select_until_budget(
         cand, "score_micro", "n_ids", BPE_BUDGET, ["doc_id"]
@@ -9065,11 +8837,8 @@ def q_bpe_learned_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
     document with scalar-subquery replaces, and re-derives the budget
     cut, offsets, and every id in every window — drift anywhere in the
     composition fails the hash."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.bpe import (
         bpe_encode_memoized,
     )
@@ -9084,32 +8853,25 @@ def q_bpe_learned_packs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t["documents"]
     learned = _learned_merges(spark, sf_dir)
     merges = [(l, r) for l, r, _ in learned]
+
     # materialize the encoded corpus ONCE (done-sentinel scratch, the
     # bpe_budget_packs pattern): the pack machinery downstream walks
     # its input several times
-    base = scratch_dir(
-        "bpelearnedpacks-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    cand_path = os.path.join(base, "cand")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
+    def build(base: str) -> None:
         from jobinsight_data_pipeline_spark.operators.parallelism import (
             widen_for_cpu,
         )
 
-        shutil.rmtree(cand_path, ignore_errors=True)
+        cand_path = os.path.join(base, "cand")
         enc = bpe_encode_memoized(
             widen_for_cpu(docs), merges, word_encoder="python"
         )
         enc.join(docs.select("doc_id", "n_chars"), "doc_id").write.parquet(
             cand_path
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "bpelearnedpacks-gate-", build)
+    cand_path = os.path.join(base, "cand")
     cand = spark.read.parquet(cand_path)
     kept = select_until_budget(
         cand, "n_chars", "n_ids", BPE_BUDGET, ["doc_id"]
@@ -9579,11 +9341,8 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_xor checksum over the stage's full content); the DuckDB oracle
     replays EVERY stage — a survivor flip, a drifted weight, one id off
     in one pack — moves some stage's checksum and fails the hash."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.bpe import (
         bpe_encode_memoized,
     )
@@ -9622,19 +9381,9 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus ONCE (done-sentinel scratch, the bpe_budget_packs
     # pattern): every stage row, the mixture, the waterfill, and the
     # packs all re-read them — at 100 TB these ARE lake writes
-    base = scratch_dir(
-        "corpusbuild-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    flags_path = os.path.join(base, "flags")
-    enc_path = os.path.join(base, "enc")
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(flags_path, ignore_errors=True)
-        shutil.rmtree(enc_path, ignore_errors=True)
+    def build(base: str) -> None:
+        flags_path = os.path.join(base, "flags")
+        enc_path = os.path.join(base, "enc")
         planted = widen_for_cpu(docs).select(
             "doc_id", F.expr(_CB_CASE).alias("text"), "source", "n_chars"
         )
@@ -9742,8 +9491,10 @@ def q_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.parquet(enc_path)
         for c in ckpts:
             _free_local_checkpoint(c)
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "corpusbuild-gate-", build)
+    flags_path = os.path.join(base, "flags")
+    enc_path = os.path.join(base, "enc")
 
     flags = spark.read.parquet(flags_path)
     enc = spark.read.parquet(enc_path)
@@ -10798,11 +10549,8 @@ def q_stream_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_json parse into ONE exactly-once parquet sink (data columns +
     quarantine column), and the sink must reproduce the batch path's
     per-source checksums and quarantine count bit-for-bit."""
-    import hashlib
     import os
-    import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.sources.jsonl import write_jsonl
     from jobinsight_data_pipeline_spark.streaming.incremental import (
         stream_jsonl_ingest,
@@ -10810,16 +10558,8 @@ def q_stream_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir, "documents")
     docs = t["documents"]
-    base = scratch_dir(
-        "streamjsonl-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
         raw = f"{base}/drops"
         write_jsonl(docs, raw, shards=4)
         with open(os.path.join(raw, "part-corrupt.json"), "w", encoding="utf-8") as fh:
@@ -10828,8 +10568,8 @@ def q_stream_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, raw, docs.schema, f"{base}/sink", f"{base}/ckpt"
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamjsonl-gate-", build)
 
     return _jsonl_ingest_summary(spark.read.parquet(f"{base}/sink"))
 
@@ -11090,11 +10830,6 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares O_CMS_HEAVY_HITTERS verbatim (the stream_jsonl_ingest
     shared-oracle discipline; batch arrival order is irrelevant
     because cell sums commute)."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.parallelism import (
         widen_for_cpu,
     )
@@ -11117,21 +10852,9 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("token") != "")
         )
 
-    base = scratch_dir(
-        "streamcms-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_cms_build(
             spark,
             raw,
@@ -11144,8 +10867,8 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             width=512,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamcms-gate-", build)
 
     merged = read_cms_state(spark, f"{base}/state")
     toks = toks_of(docs)
@@ -11317,11 +11040,6 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, so this gate shares O_HIST_QUANTILES verbatim (the
     stream_cms shared-oracle discipline — batch arrival order is
     irrelevant because cell sums commute)."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.operators.sketches import (
         histogram_quantiles,
     )
@@ -11332,24 +11050,15 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load(spark, sf_dir, "events")
     ev = t["events"].select("event_id", "event_type", "value")
-    base = scratch_dir(
-        "streamhist-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base: str) -> None:
         raw = f"{base}/drops"
         # coalesce the split key so the four drops PARTITION the table
         # even if event_id ever grows NULLs (NULL % 4 matches no drop —
         # the r12 review's silent-coverage-gap class)
-        for i in range(4):
-            ev.filter(
-                F.coalesce(F.col("event_id"), F.lit(0)) % 4 == i
-            ).coalesce(1).write.mode("append").parquet(raw)
+        write_drops(
+            ev, F.coalesce(F.col("event_id"), F.lit(0)), raw
+        )
         query = stream_histogram_build(
             spark,
             raw,
@@ -11363,8 +11072,8 @@ def q_stream_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             buckets=_HIST_K,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamhist-gate-", build)
     merged = read_histogram_state(spark, f"{base}/state", "event_type")
     return histogram_quantiles(
         merged, _HIST_QS, "event_type",
@@ -12609,11 +12318,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming ≡ batch shared-oracle discipline, sixth state shape).
     Distinct-key tracking that never rescans history and never
     shuffles raw keys."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.streaming.incremental import (
         read_hll_state,
         stream_hll_build,
@@ -12622,28 +12326,16 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"].select("doc_id", "text")
 
-    base = scratch_dir(
-        "streamhll-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_hll_build(
             spark, raw, docs.schema, f"{base}/state", f"{base}/ckpt",
             key_col="doc_id", buckets=64,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamhll-gate-", build)
 
     return read_hll_state(spark, f"{base}/state")
 
@@ -12665,11 +12357,6 @@ def q_stream_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim — the streaming ≡ batch shared-oracle discipline. A
     weighted corpus sample maintained forever at ≤ n rows of state per
     batch, never rescanning history."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.streaming.incremental import (
         read_reservoir_state,
         stream_reservoir_build,
@@ -12678,28 +12365,16 @@ def q_stream_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"].select("doc_id", "n_chars")
 
-    base = scratch_dir(
-        "streamres-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_reservoir_build(
             spark, raw, docs.schema, f"{base}/state", f"{base}/ckpt",
             key_col="doc_id", weight_col="n_chars", n=25,
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamres-gate-", build)
 
     return read_reservoir_state(
         spark, f"{base}/state", "doc_id", "n_chars", n=25
@@ -12721,11 +12396,6 @@ def q_stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim — the streaming ≡ batch shared-oracle discipline. An
     eval-panel/stratified-sample maintained forever at ≤ strata×n rows
     of state per batch."""
-    import hashlib
-    import os
-    import shutil
-
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
     from jobinsight_data_pipeline_spark.streaming.incremental import (
         read_stratified_reservoir_state,
         stream_stratified_reservoir_build,
@@ -12734,29 +12404,17 @@ def q_stream_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents")
     docs = t["documents"].select("doc_id", "source")
 
-    base = scratch_dir(
-        "streamstrat-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
-    )
-    done = os.path.join(base, "_gate_done")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base: str) -> None:
         raw = f"{base}/drops"
-        for i in range(4):
-            docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
-                "append"
-            ).parquet(raw)
+        write_drops(docs, F.col("doc_id"), raw)
         query = stream_stratified_reservoir_build(
             spark, raw, docs.schema, f"{base}/state", f"{base}/ckpt",
             stratum_cols=["source"], key_col="doc_id",
             n_per_stratum=7, salt="r4",
         )
         query.awaitTermination()
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    base = gate_asset(spark, sf_dir, "streamstrat-gate-", build)
 
     return read_stratified_reservoir_state(
         spark, f"{base}/state", ["source"], "doc_id",
@@ -13748,22 +13406,19 @@ _KMEANS_SCALE = 10**6
 
 #: per-(session, sf_dir) memo of the fitted centroid matrix — both
 #: kmeans gates replay the same fit; the model is k*dim ints (tiny)
-_KMEANS_FIT_CACHE: dict[tuple[int, str], list[list[int]]] = {}
-
-
 def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_fit_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _KMEANS_FIT_CACHE:
+    def build() -> list[list[int]]:
         t = load(spark, sf_dir, "embeddings")
-        _KMEANS_FIT_CACHE[key] = kmeans_fit_quantized(
+        return kmeans_fit_quantized(
             t["embeddings"], "embedding", "vec_id",
             k=_KMEANS_K, iterations=_KMEANS_ITERS, scale=_KMEANS_SCALE,
         )
-    return _KMEANS_FIT_CACHE[key]
+
+    return session_memo(spark, "kmeans_centroids", sf_dir, build)
 
 
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13945,7 +13600,6 @@ O_KMEANS_FIT = _kmeans_oracle_sql(
 
 
 _PQRT_ITERS = 2
-_PQRT_CACHE: dict[tuple[int, str], list] = {}
 
 
 def _pqr_trained_books(
@@ -13961,8 +13615,7 @@ def _pqr_trained_books(
         train_pq_codebooks_residual,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _PQRT_CACHE:
+    def build() -> list[list[list[float]]]:
         t = load(spark, sf_dir, "embeddings")
         fitted = _kmeans_centroids(spark, sf_dir)
         cents = [[x / _KMEANS_SCALE for x in row] for row in fitted]
@@ -13970,10 +13623,11 @@ def _pqr_trained_books(
             t["embeddings"], cents, m=PQ_M, k=PQ_K,
             iterations=_PQRT_ITERS, dim=64, scale=_KMEANS_SCALE,
         )
-        _PQRT_CACHE[key] = [
+        return [
             [[x / _KMEANS_SCALE for x in c] for c in book] for book in ints
         ]
-    return _PQRT_CACHE[key]
+
+    return session_memo(spark, "pqr_trained_books", sf_dir, build)
 
 
 def _pqrt_train_cte() -> str:
@@ -14180,26 +13834,23 @@ FROM errs"""
 O_PQ_RESIDUAL_ERROR = _pq_residual_error_oracle()
 
 
-_KMEANS_PP_CACHE: dict[tuple[int, str], list[list[int]]] = {}
-
-
 def _kmeans_pp_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     from jobinsight_data_pipeline_spark.operators.clustering import (
         kmeans_pp_fit_quantized,
     )
 
-    key = (id(spark), sf_dir)
-    if key not in _KMEANS_PP_CACHE:
+    def build() -> list[list[int]]:
         t = load(spark, sf_dir, "embeddings")
         # seeds + fit over ONE shared checkpointed quantize pass —
         # bit-identical to the separate kmeans_pp_seeds /
         # kmeans_fit_quantized calls (the oracle replays the same
         # lineage), one prepare pass cheaper
-        _KMEANS_PP_CACHE[key] = kmeans_pp_fit_quantized(
+        return kmeans_pp_fit_quantized(
             t["embeddings"], "embedding", "vec_id",
             k=_KMEANS_K, iterations=_KMEANS_ITERS, scale=_KMEANS_SCALE,
         )
-    return _KMEANS_PP_CACHE[key]
+
+    return session_memo(spark, "kmeans_pp_centroids", sf_dir, build)
 
 
 def q_kmeans_pp_fit(spark: SparkSession, sf_dir: str) -> DataFrame:

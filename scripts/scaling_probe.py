@@ -568,20 +568,14 @@ def probes(spark, sf_dir):
 
 
 def _corpus_build_cold(spark, sf_dir):
-    import hashlib
     import shutil
 
-    from jobinsight_data_pipeline_spark.catalog import scratch_dir
+    from jobinsight_data_pipeline_spark.catalog import gate_dir
     from jobinsight_data_pipeline_spark.catalog.textml import q_corpus_build
 
-    base = scratch_dir(
-        "corpusbuild-gate-",
-        "{}-{}".format(
-            spark.sparkContext.applicationId,
-            hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-        ),
+    shutil.rmtree(
+        gate_dir(spark, sf_dir, "corpusbuild-gate-"), ignore_errors=True
     )
-    shutil.rmtree(base, ignore_errors=True)
     return q_corpus_build(spark, sf_dir)
 
 
