@@ -214,3 +214,18 @@ def parse_locations_udf(pairs: pd.Series) -> pd.Series:
             {"province": p, "city": c, "district": d} for (p, c, d) in _parse_pairs_value(v)
         ]
     )
+
+
+def staging_locations() -> Column:
+    """A staging row's parsed (province, city, district) tuples:
+    ``location_pairs`` when non-empty, else ``[location]``, else an empty
+    array (parsed to the 'Unknown' fallback). DimLocation and the bridge
+    both resolve locations through this one expression, so a bridge
+    tuple always has a dimension row to match."""
+    pairs = F.col("location_pairs")
+    return parse_locations_udf(
+        F.when(pairs.isNotNull() & (F.size(pairs) > 0), pairs).otherwise(
+            F.when(F.col("location").isNotNull(), F.array(F.col("location")))
+            .otherwise(F.array().cast("array<string>"))
+        )
+    )

@@ -11,7 +11,7 @@ Scale notes (100 TB posture):
 - ``upsert_by_key`` shuffles both sides on the key — on a real deployment
   partition/bucket the base table by the same key so AQE can plan a
   shuffle-free merge; incoming batches are typically small → broadcast.
-- surrogate-key assignment uses max()+row_number over the *incoming batch
+- surrogate-key assignment uses max()+rank over the *incoming batch
   only* (dims/facts grow by small daily deltas), never a global resort of
   the base table.
 """
@@ -124,71 +124,55 @@ def _split_points(df: DataFrame, col: str, parts: int) -> list:
     return out
 
 
-def assign_surrogate_keys(
+def running_offset(
     df: DataFrame,
-    sk_col: str,
-    existing_max: int,
+    weight: Column,
+    out_col: str,
     order_by: list[str],
-    scalable: bool | None = None,
+    bounds: list | None = None,
 ) -> DataFrame:
-    """SC5: dense surrogate keys without a sequence object —
-    ``existing_max + row_number() over (order by natural key)``.
+    """Exclusive prefix sum of ``weight`` in the total order of
+    ``order_by`` (ascending, NULLs last) as ``out_col`` — for each row,
+    the sum of ``weight`` over every earlier row. A unit weight gives the
+    0-based global rank; a token count gives the packing offset.
 
-    Two forms, chosen by the CALLER's knowledge of the input size:
+    The plan is chosen from the observed input size, never by the caller:
 
-    **Delta mode** (default): one local sort over a deliberate constant
-    partition key. By contract the input is a bounded daily delta (the
-    reference's cadence — incoming batches, never the base table), so
-    single-partition work is the right plan; the constant key states that
-    intent and keeps the plan free of the "No Partition Defined" smell
-    that flags *accidental* global windows. Zero extra jobs: the delta
-    subtree stays fused and lazy.
+    **Single-partition plan** — one local sort over a deliberate constant
+    partition key. Taken when the sizing probe (``_split_points``, ONE
+    column-pruned bottom-k job) comes back short: the input has fewer
+    than ``_SAMPLE_PER_PART × defaultParallelism`` non-null leading keys,
+    so one sort is the right plan.
 
-    **Bucketed mode** (``scalable=True`` — bulk/initial loads, wired in
-    plans/pipeline.py): identical keys with no global sort:
+    **Bucketed plan** — taken on a full sample; no global sort at any size:
 
     1. bucket each row by comparing its FIRST order column against ≤ P-1
-       split points (a bounded sample, collected once and inlined as plan
-       literals) — a pure function of the row's key, deterministic across
-       plan re-executions, unlike repartitionByRange's sampled
-       RangePartitioner or spark_partition_id (which made this path
-       unsafe for multi-consumer plans in its first incarnation);
-    2. ``row_number`` within each bucket (parallel local sorts — the
-       window's partitionBy supplies the hash shuffle);
-    3. global position = local rank + cumulative count of earlier buckets
-       (a window over ≤ P rows).
-    Sizing is ONE column-pruned job (see ``_split_points`` — the bottom-k
-    hash sample doubles as the smallness probe, so no ``count()`` pass
-    executes the upstream DAG; round 2's separate count + sample jobs per
-    call regressed the bench 1.8×). Inputs with < k non-null keys fall
-    back to the delta plan. The output is NOT persisted here — keys are
-    reproducible on re-execution (frozen literals, total-order ranks), so
-    callers own the caching decision at their materialization boundaries.
+       split points (collected once and inlined as plan literals) — a
+       pure function of the row's key, deterministic across plan
+       re-executions, unlike repartitionByRange's sampled
+       RangePartitioner or spark_partition_id;
+    2. local exclusive sum within each bucket (parallel local sorts —
+       the window's partitionBy supplies the hash shuffle);
+    3. add the sum of all earlier buckets (a window over ≤ P rows,
+       broadcast back).
 
-    Keys are reproducible across reruns/layout changes when ``order_by``
-    is unique per row (true for every caller: dims key on the deduped
-    natural key, facts on the grain) — global rank depends only on the
-    total key order, never on the split points, which only steer balance.
-    Rows tying on the first order column land in one bucket; with a
-    near-unique leading column (all callers) buckets stay even. The
-    reference seeds sequences at 10000 (sql/schema_dwh.sql:3-6); callers
-    pass ``existing_max=9999`` for an empty table to match.
-    """
+    ``bounds`` supplies split-point literals directly and skips the probe
+    (``[]`` = single-partition plan). Outputs are identical on both plans
+    when ``order_by`` is unique per row: they depend only on the total
+    order, and the split points only steer balance. Rows tying on the
+    first order column land in one bucket, so a near-unique leading
+    column keeps buckets even. The output is NOT persisted here —
+    offsets are reproducible on re-execution (frozen literals, total
+    order), so callers own the caching decision."""
     cols = [F.col(c).asc_nulls_last() for c in order_by]
-    if scalable is None:
-        scalable = False
-    single = Window.partitionBy(F.lit(0)).orderBy(*cols)
-    if not scalable:
-        return df.withColumn(
-            sk_col, (F.row_number().over(single) + F.lit(existing_max)).cast("long")
-        )
-    parts = df.sparkSession.sparkContext.defaultParallelism
-    bounds = _split_points(df, order_by[0], parts)
+    earlier = Window.rowsBetween(Window.unboundedPreceding, -1)
+    if bounds is None:
+        parts = df.sparkSession.sparkContext.defaultParallelism
+        bounds = _split_points(df, order_by[0], parts)
     if not bounds:
-        # small bulk (or constant leading key) — the delta plan is right
-        return df.withColumn(
-            sk_col, (F.row_number().over(single) + F.lit(existing_max)).cast("long")
-        )
+        single = earlier.partitionBy(F.lit(0)).orderBy(*cols)
+        return df.withColumn(out_col, F.coalesce(F.sum(weight).over(single), F.lit(0)))
+
     first = F.col(order_by[0])
     # bucket = number of split points strictly below the key; NULLs sort
     # last (asc_nulls_last) → the final bucket
@@ -196,23 +180,40 @@ def assign_surrogate_keys(
     bucketed = df.withColumn(
         "_pid", F.when(first.isNull(), F.lit(len(bounds))).otherwise(bucket)
     )
+    local_w = earlier.partitionBy("_pid").orderBy(*cols)
     local = bucketed.withColumn(
-        "_lrn", F.row_number().over(Window.partitionBy("_pid").orderBy(*cols))
+        "_lstart", F.coalesce(F.sum(weight).over(local_w), F.lit(0))
     )
-    counts = bucketed.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    prior = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn("_off", F.coalesce(F.sum("_n").over(prior), F.lit(0)))
+    totals = bucketed.groupBy("_pid").agg(F.sum(weight).alias("_t"))
+    prior = earlier.partitionBy(F.lit(0)).orderBy("_pid")
+    offsets = totals.withColumn("_off", F.coalesce(F.sum("_t").over(prior), F.lit(0)))
     return (
         local.join(F.broadcast(offsets.select("_pid", "_off")), "_pid")
-        .withColumn(
-            sk_col,
-            (F.col("_lrn") + F.col("_off") + F.lit(existing_max)).cast("long"),
-        )
-        .drop("_pid", "_lrn", "_off")
+        .withColumn(out_col, F.col("_lstart") + F.col("_off"))
+        .drop("_pid", "_lstart", "_off")
+    )
+
+
+def assign_surrogate_keys(
+    df: DataFrame,
+    sk_col: str,
+    existing_max: int,
+    order_by: list[str],
+) -> DataFrame:
+    """SC5: dense surrogate keys without a sequence object —
+    ``existing_max + 1 + rank``, where the 0-based rank is
+    :func:`running_offset` of a unit weight in ``order_by`` order (which
+    also picks the plan).
+
+    Keys are reproducible across reruns/layout changes when ``order_by``
+    is unique per row (true for every caller: dims key on the deduped
+    natural key, facts on the grain). The reference seeds sequences at
+    10000 (sql/schema_dwh.sql:3-6); callers pass ``existing_max=9999``
+    for an empty table to match.
+    """
+    ranked = running_offset(df, F.lit(1), sk_col, order_by)
+    return ranked.withColumn(
+        sk_col, (F.col(sk_col) + F.lit(existing_max + 1)).cast("long")
     )
 
 

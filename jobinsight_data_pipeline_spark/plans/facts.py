@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from jobinsight_data_pipeline_spark.functions.location import parse_locations_udf
+from jobinsight_data_pipeline_spark.functions.location import staging_locations
 from jobinsight_data_pipeline_spark.operators.merge import (
     assign_surrogate_keys,
     dedupe_last_write,
@@ -101,9 +101,7 @@ def build_fact_batch(
     )
 
 
-def merge_facts(
-    existing: DataFrame | None, incoming: DataFrame, scalable: bool | None = None
-) -> DataFrame:
+def merge_facts(existing: DataFrame | None, incoming: DataFrame) -> DataFrame:
     """SC3: grain-level merge. Matched grains keep fact_id and load_month
     but take all new measures; unmatched grains get new fact_ids
     (max + row_number)."""
@@ -112,8 +110,7 @@ def merge_facts(
 
     if existing is None or not existing.columns:
         return assign_surrogate_keys(
-            incoming, "fact_id", max_key(None, "fact_id"), grain,
-            scalable=scalable,
+            incoming, "fact_id", max_key(None, "fact_id"), grain
         ).select("fact_id", *incoming.columns)
 
     inc = incoming.select(
@@ -142,8 +139,7 @@ def merge_facts(
 
     fresh = incoming.join(existing.select(grain[0], grain[1]), grain, "left_anti")
     fresh_keyed = assign_surrogate_keys(
-        fresh, "fact_id", max_key(existing, "fact_id"), grain,
-        scalable=scalable,
+        fresh, "fact_id", max_key(existing, "fact_id"), grain
     ).select(existing.columns)
     return updated.unionByName(fresh_keyed)
 
@@ -205,22 +201,7 @@ def build_bridge(
     jobs = broadcast(dim_job.filter(F.col("is_current")).select("job_id", "job_sk"))
     job_locs = (
         staging.join(jobs, "job_id", "inner")
-        .select(
-            "job_sk",
-            F.explode(
-                parse_locations_udf(
-                    F.when(
-                        F.col("location_pairs").isNotNull()
-                        & (F.size("location_pairs") > 0),
-                        F.col("location_pairs"),
-                    ).otherwise(
-                        F.when(
-                            F.col("location").isNotNull(), F.array(F.col("location"))
-                        ).otherwise(F.array().cast("array<string>"))
-                    )
-                )
-            ).alias("loc"),
-        )
+        .select("job_sk", F.explode(staging_locations()).alias("loc"))
         .select("job_sk", "loc.province", "loc.city", "loc.district")
         .dropDuplicates(["job_sk", "province", "city", "district"])
     )

@@ -18,6 +18,7 @@ Delta/Iceberg — the plans above it are format-agnostic.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -44,6 +45,20 @@ class ParquetLake:
                 return fh.read().strip() or None
         except FileNotFoundError:
             return None
+
+    def _flip_pointer(self, table: str, version: str) -> None:
+        tmp = self._pointer(table) + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(version)
+        os.replace(tmp, self._pointer(table))  # atomic flip
+
+    def _drop_version(self, table: str, version: str) -> None:
+        vdir = os.path.join(self._table_dir(table), version)
+        shutil.rmtree(vdir, ignore_errors=True)
+        try:
+            os.remove(vdir + ".schema")
+        except FileNotFoundError:
+            pass
 
     def versions(self, table: str) -> list[str]:
         d = self._table_dir(table)
@@ -90,7 +105,7 @@ class ParquetLake:
             from pyspark.sql.types import StructType
 
             with open(schema_file) as fh:
-                schema = StructType.fromJson(__import__("json").loads(fh.read()))
+                schema = StructType.fromJson(json.loads(fh.read()))
             return spark.read.schema(schema).parquet(p)
         return spark.read.parquet(p)
 
@@ -105,14 +120,9 @@ class ParquetLake:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
-        import json as _json
-
         with open(target + ".schema", "w") as fh:
-            fh.write(_json.dumps(df.schema.jsonValue()))
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer(table))  # atomic flip
+            fh.write(json.dumps(df.schema.jsonValue()))
+        self._flip_pointer(table, version)
         self.vacuum(table)
         return target
 
@@ -122,12 +132,7 @@ class ParquetLake:
         vs = self.versions(table)
         for v in vs[: -self.keep_versions]:
             if v != live:
-                vdir = os.path.join(self._table_dir(table), v)
-                shutil.rmtree(vdir, ignore_errors=True)
-                try:
-                    os.remove(vdir + ".schema")
-                except FileNotFoundError:
-                    pass
+                self._drop_version(table, v)
 
     def restore(self, table: str, version: str | None = None) -> str:
         """Roll the pointer back (reference: restore DB file backup on ETL
@@ -141,10 +146,7 @@ class ParquetLake:
             version = older[-1]
         if version not in vs:
             raise ValueError(f"unknown version {version} for {table}")
-        tmp = self._pointer(table) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, self._pointer(table))
+        self._flip_pointer(table, version)
         return version
 
 
@@ -378,12 +380,7 @@ def forget_keys(
             live = lake.current_version(table)
             for v in lake.versions(table):
                 if v != live:
-                    vdir = os.path.join(lake._table_dir(table), v)
-                    shutil.rmtree(vdir, ignore_errors=True)
-                    try:
-                        os.remove(vdir + ".schema")
-                    except FileNotFoundError:
-                        pass
+                    lake._drop_version(table, v)
         after = lake.read(spark, table).count()
         rows.append((table, before, before - after, after))
     return spark.createDataFrame(

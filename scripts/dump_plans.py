@@ -143,9 +143,9 @@ def bench_only_builders(spark, sf_dir):
         import tempfile
 
         idx_path = tempfile.mkdtemp(prefix="plan_ivfpq_") + "/idx"
-        build_ivf_pq_index(emb, cents, cb).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(idx_path)
+        build_ivf_pq_index(emb, cents, cb).repartition("cell").write.mode(
+            "overwrite"
+        ).partitionBy("cell").parquet(idx_path)
         index = spark.read.parquet(idx_path)
         qbatch = emb.filter("vec_id < 20").selectExpr(
             "vec_id AS query_id", "embedding"

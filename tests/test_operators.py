@@ -466,7 +466,7 @@ def test_pack_sequences_known_answers_and_path_equivalence(spark):
     # capacity 1000: offsets 0,100,1000,1030,2030 -> packs 0,0,1,1,2
     expect = {1: (0, 0), 2: (100, 0), 3: (1000, 1), 4: (1030, 1), 5: (2030, 2)}
 
-    delta = pack_sequences(df, "n_tokens", 1000, ["doc_id"], scalable=False)
+    delta = pack_sequences(df, "n_tokens", 1000, ["doc_id"], bounds=[])
     got = {r["doc_id"]: (r["start_offset"], r["pack_id"]) for r in delta.collect()}
     assert got == expect
 
@@ -753,7 +753,7 @@ def test_shuffle_shard_permutation_and_path_equivalence(spark):
     from jobinsight_data_pipeline_spark.operators.packing import shuffle_shard
 
     df = spark.createDataFrame([(i,) for i in range(257)], "k: long")
-    out = shuffle_shard(df, "k", shard_size=32, scalable=False).cache()
+    out = shuffle_shard(df, "k", shard_size=32, bounds=[]).cache()
     ranks = sorted(r["rank"] for r in out.collect())
     assert ranks == list(range(257))
     sizes = {
@@ -1199,7 +1199,7 @@ def test_materialize_packs_reassembles_stream(spark):
     expect_stream = [x for _, ids in rows for x in ids]
 
     out = {r["seq_id"]: r for r in
-           materialize_packs(df, capacity=16, scalable=False).collect()}
+           materialize_packs(df, capacity=16, bounds=[]).collect()}
     got_stream = []
     for s in sorted(out):
         r = out[s]
@@ -1231,7 +1231,7 @@ def test_pack_spans_known_answers_and_consistency(spark):
     got = {
         (r["seq_id"], r["doc_id"]): (r["start_in_pack"], r["span_len"])
         for r in pack_spans(
-            sized, "n_tokens", 256, ["doc_id"], scalable=False
+            sized, "n_tokens", 256, ["doc_id"], bounds=[]
         ).collect()
     }
     assert got == {
@@ -1246,10 +1246,10 @@ def test_pack_spans_known_answers_and_consistency(spark):
     df = spark.createDataFrame(rows, "doc_id: long, ids: array<int>")
     by_pack = {
         r["seq_id"]: r["n_tokens"]
-        for r in materialize_packs(df, capacity=16, scalable=False).collect()
+        for r in materialize_packs(df, capacity=16, bounds=[]).collect()
     }
     sized2 = df.selectExpr("doc_id", "CAST(size(ids) AS LONG) AS n_tokens")
-    spans = pack_spans(sized2, "n_tokens", 16, ["doc_id"], scalable=False)
+    spans = pack_spans(sized2, "n_tokens", 16, ["doc_id"], bounds=[])
     sums = {
         r["seq_id"]: r["total"]
         for r in spans.groupBy("seq_id")
@@ -1907,7 +1907,9 @@ def test_ivf_pq_indexed_bit_identical_to_oneshot(spark, tmp_path):
     cents = unit_centroids(64, 16, seed=11)
     cb = pq_codebooks()
     path = str(tmp_path / "idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(path)
     index = spark.read.parquet(path)
 
     for qid in (0, 7, 23):
@@ -1987,9 +1989,9 @@ def test_ivf_pq_residual_routes_bit_identical(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents, cb = unit_centroids(64, 16, seed=11), pq_codebooks()
     path = str(tmp_path / "ridx")
-    build_ivf_pq_index(emb, cents, cb, residual=True).write.partitionBy(
+    build_ivf_pq_index(emb, cents, cb, residual=True).repartition(
         "cell"
-    ).parquet(path)
+    ).write.partitionBy("cell").parquet(path)
     index = spark.read.parquet(path)
     qids = (0, 7, 23)
     queries = emb.filter(F.col("vec_id").isin(*qids)).select(

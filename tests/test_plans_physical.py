@@ -214,6 +214,40 @@ def test_pack_sequences_bucketed_avoids_global_sort(spark):
     assert "hashpartitioning(_pid" in plan
 
 
+def test_surrogate_key_plan_follows_input_size(spark):
+    """No caller picks the key plan; the kernel's sizing probe does. An
+    input with more keys than the probe samples (defaultParallelism ×
+    _SAMPLE_PER_PART) gets the bucketed plan — a broadcast join on the
+    ``_pid`` bucket; a smaller one gets one window over the constant
+    key, with the keys the bucketed plan assigns."""
+    from jobinsight_data_pipeline_spark.operators.merge import (
+        _SAMPLE_PER_PART,
+        assign_surrogate_keys,
+        running_offset,
+    )
+
+    k = spark.sparkContext.defaultParallelism * _SAMPLE_PER_PART
+
+    def keyed(n):
+        return spark.range(n).select(F.format_string("k%07d", "id").alias("nk"))
+
+    big = physical_plan(assign_surrogate_keys(keyed(k + 1), "sk", 9999, ["nk"]))
+    assert "BroadcastHashJoin [_pid" in big, big
+    assert "hashpartitioning(_pid" in big
+
+    small_df = keyed(k - 1)
+    small = assign_surrogate_keys(small_df, "sk", 9999, ["nk"])
+    plan = physical_plan(small)
+    assert "_pid" not in plan, plan
+    assert plan.count("Window [") == 1 and "Exchange SinglePartition" in plan
+    bucketed = running_offset(
+        small_df, F.lit(1), "r", ["nk"], bounds=["k0000300", "k0000700"]
+    )
+    want = {r["nk"]: r["r"] + 10_000 for r in bucketed.collect()}
+    assert {r["nk"]: r["sk"] for r in small.collect()} == want
+    assert sorted(want.values()) == list(range(10_000, 10_000 + k - 1))
+
+
 def test_decontaminate_broadcasts_size_frame_only(spark):
     from jobinsight_data_pipeline_spark.operators.dedup import (
         ngram_containment_pairs,
@@ -528,7 +562,9 @@ def test_ivf_pq_many_dynamic_partition_pruning(spark, tmp_path):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents, cb = unit_centroids(64, 16, seed=11), pq_codebooks()
     idx_path = str(tmp_path / "idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(idx_path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(idx_path)
     index = spark.read.parquet(idx_path)
     queries = emb.filter("vec_id < 4").select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -558,7 +594,9 @@ def test_ivf_pq_index_partition_prunes_probe_cells(spark, tmp_path):
     cents = unit_centroids(64, 16, seed=11)
     cb = pq_codebooks()
     idx_path = str(tmp_path / "ivfpq_idx")
-    build_ivf_pq_index(emb, cents, cb).write.partitionBy("cell").parquet(idx_path)
+    build_ivf_pq_index(emb, cents, cb).repartition("cell").write.partitionBy(
+        "cell"
+    ).parquet(idx_path)
 
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()["embedding"]]
     index = spark.read.parquet(idx_path)
